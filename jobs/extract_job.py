@@ -1,15 +1,15 @@
 #!/usr/bin/env python
 """Production entrypoint — run the extraction pipeline via spark-submit.
 
-Packaging (pure-Python engine, no native deps — SURVEY §4.3):
+Packaging (pure-Python engine, no native deps — SURVEY §4.3), from the
+repository root:
 
-    cd /root/repo
     zip -qr engine.zip mistral_ocr_app_spark -x '*__pycache__*'
     spark-submit --py-files engine.zip jobs/extract_job.py \\
         --input  /path/to/transcripts_parquet_or_iceberg \\
         --output /path/to/output_dir \\
         --buckets 4096 \\
-        [--assemble] [--chunk-size 4096] [--resume-only] [--audit]
+        [--assemble] [--resume-only] [--audit]
 
 On a cluster, --input can be an Iceberg table path; the job is resumable:
 re-submission after a failure skips buckets already committed to
@@ -27,8 +27,6 @@ import sys
 # arrives via --py-files and this is a no-op
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -45,39 +43,19 @@ def main() -> int:
                     help="run the lineage fingerprint audit on the output "
                          "and exit (nonzero when any committed bucket's "
                          "bytes no longer match their recorded fingerprint)")
-    ap.add_argument("--auto-threshold", type=int, default=65_536,
-                    help="assemble_auto routing: conversations above this "
-                         "turn count take the chunked OOM-safe path, the "
-                         "rest the flat single-exchange path (0 = flat for "
-                         "all unless --chunk-size forces chunked)")
-    ap.add_argument("--chunk-size", type=int, default=0,
-                    help="force hierarchical assembly with this many turns per "
-                         "chunk (bounds per-group memory for pathological "
-                         "conversations; 0 = flat single-exchange assembly)")
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("transcript_extraction")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-
-    from mistral_ocr_app_spark.operators.assemble import (
-        assemble_auto,
-        assemble_conversations,
-        assemble_conversations_chunked,
-    )
+    from mistral_ocr_app_spark.operators.assemble import assemble_auto
     from mistral_ocr_app_spark.plans.lineage import (
         committed_lineage,
         pending_transcripts,
         run_extraction_with_lineage,
         verify_lineage,
     )
+    from mistral_ocr_app_spark.session import get_spark
     from mistral_ocr_app_spark.sources.io import write_markdown_sink
+
+    spark = get_spark(app_name="transcript_extraction")
 
     if args.audit:
         bad = verify_lineage(spark, args.output)
@@ -110,17 +88,10 @@ def main() -> int:
     if args.assemble:
         extracted = spark.read.parquet(f"{args.output}/data")
         # extracted is parquet-backed here, so assemble_auto's three
-        # traversals re-scan a columnar file, not the extraction UDF
-        if args.chunk_size > 0:
-            assembled = assemble_conversations_chunked(
-                extracted, chunk_size=args.chunk_size
-            )
-        elif args.auto_threshold > 0:
-            assembled = assemble_auto(
-                extracted, threshold_turns=args.auto_threshold
-            )
-        else:
-            assembled = assemble_conversations(extracted)
+        # traversals re-scan a columnar file, not the extraction UDF; it
+        # routes each conversation to the flat or the chunked (OOM-safe)
+        # path by its turn count
+        assembled = assemble_auto(extracted)
         write_markdown_sink(assembled, f"{args.output}/assembled")
     print(json.dumps(stats))
     spark.stop()

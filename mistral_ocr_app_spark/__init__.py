@@ -1,6 +1,7 @@
 """mistral_ocr_app_spark — a from-scratch PySpark-native main-content
 extraction engine with the query/data-processing capabilities of the
-reference app ``ivan-meer/mistral-ocr-app`` (see /root/repo/SURVEY.md).
+reference app ``ivan-meer/mistral-ocr-app`` (see the repository's
+SURVEY.md).
 
 Layout:
     fixtures/   deterministic transcript corpus generator + golden

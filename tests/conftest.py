@@ -6,7 +6,7 @@ from mistral_ocr_app_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=8, shuffle_partitions=16, app_name="tests")
+    s = get_spark(shuffle_partitions=16, app_name="tests")
     yield s
 
 

@@ -13,9 +13,10 @@ launches, so this cannot share the test session.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -27,16 +28,22 @@ def main() -> int:
     ap.add_argument("--text-len", type=int, default=8)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName(f"memory_probe_{args.mode}")
-        .config("spark.driver.memory", args.driver_memory)
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    from mistral_ocr_app_spark.session import get_spark
+
+    # serial GC and a fixed processor count keep the OOM boundary from
+    # moving with host load: under the default G1 collector the flat
+    # probe once survived 650m while another Spark job loaded every core
+    spark = get_spark(
+        cores=4,
+        app_name=f"memory_probe_{args.mode}",
+        shuffle_partitions=8,
+        extra_conf={
+            "spark.driver.memory": args.driver_memory,
+            "spark.driver.extraJavaOptions":
+                "-XX:+UseSerialGC -XX:ActiveProcessorCount=4",
+        },
     )
     from mistral_ocr_app_spark.operators.assemble import (
         assemble_conversations,

@@ -1,6 +1,8 @@
 """Benchmark decontamination — planted-overlap pins, pure-Python
 n-gram-set differential, and the broadcast-probe plan guarantee."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from mistral_ocr_app_spark.operators.decontaminate import (
@@ -8,6 +10,8 @@ from mistral_ocr_app_spark.operators.decontaminate import (
     contamination_counts,
     decontaminate,
 )
+
+JOBS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
 
 SF_DIR = "/root/testdata/sf0.001"
 W = 10
@@ -93,7 +97,7 @@ def test_probe_is_broadcast_no_corpus_shuffle(spark):
 def test_quality_pass_folds_decontam_flag(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     from filter_job import quality_flags
 
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")

@@ -3,6 +3,7 @@ pure-Python union-find on seeded-random pair graphs, plus the full
 dedup job end-to-end on the driver testdata."""
 
 import json
+import os
 import random
 import sys
 
@@ -13,7 +14,8 @@ from mistral_ocr_app_spark.operators.dedup_cluster import (
     connected_components,
 )
 
-sys.path.insert(0, "/root/repo/jobs")
+JOBS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
+sys.path.insert(0, JOBS_DIR)
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -4,12 +4,14 @@ incremental plan must not re-scan/recompute committed signatures."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pandas as pd
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/jobs")
+JOBS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
+sys.path.insert(0, JOBS_DIR)
 
 from dedup_job import (  # noqa: E402
     exact_pairs,
@@ -229,7 +231,7 @@ def test_incremental_job_cli_end_to_end(spark, tmp_path):
 
     def run(*args):
         proc = subprocess.run(
-            [_sys.executable, "/root/repo/jobs/dedup_job.py", *args],
+            [_sys.executable, os.path.join(JOBS_DIR, "dedup_job.py"), *args],
             capture_output=True, text=True,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]

@@ -3,10 +3,12 @@
 options), driver-side streaming — never collect()."""
 
 import json
+import os
 import sys
 import zipfile
 
-sys.path.insert(0, "/root/repo/jobs")
+JOBS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
+sys.path.insert(0, JOBS_DIR)
 
 from export_job import export, plan_export  # noqa: E402
 

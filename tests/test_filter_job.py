@@ -2,11 +2,13 @@
 query, every row lands in exactly one of kept/rejected, rejects carry
 per-rule reasons."""
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/jobs")
+JOBS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
+sys.path.insert(0, JOBS_DIR)
 
 from filter_job import quality_flags  # noqa: E402
 
@@ -102,7 +104,7 @@ def test_cli_all_stages_together(tmp_path):
     )
     proc = subprocess.run(
         [
-            sys.executable, "/root/repo/jobs/filter_job.py",
+            sys.executable, os.path.join(JOBS_DIR, "filter_job.py"),
             "--input", f"{SF_DIR}/documents.parquet",
             "--output", out_dir,
             "--min-tokens", "10",

@@ -3,11 +3,13 @@ parquet, with the reference's URL guards (GDrive rewrite, size limit,
 extension allow-list — app.py:362-406,54-57)."""
 
 import json
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/jobs")
+JOBS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
+sys.path.insert(0, JOBS_DIR)
 
 from ingest_url_list import (  # noqa: E402
     allowed_url,

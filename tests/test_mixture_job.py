@@ -1,11 +1,13 @@
 """Mixture builder — weight semantics, determinism, shuffle order."""
 
 import hashlib
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/jobs")
+JOBS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
+sys.path.insert(0, JOBS_DIR)
 
 from mixture_job import build_mixture  # noqa: E402
 

@@ -1,5 +1,6 @@
 """PII redaction — literal pins, Python-re differential, idempotence."""
 
+import os
 import re
 
 from pyspark.sql import functions as F
@@ -9,6 +10,8 @@ from mistral_ocr_app_spark.functions.pii import (
     pii_counts,
     redact_pii,
 )
+
+JOBS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
 
 CASES = [
     "contact alice.smith+x@corp.example.com today",
@@ -70,7 +73,7 @@ def test_idempotent(spark):
 def test_filter_job_stage(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     from filter_job import apply_pii_redaction
 
     df = spark.createDataFrame(

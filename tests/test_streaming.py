@@ -1,12 +1,15 @@
 """Streaming surface: availableNow-triggered runs against the fixture
 corpus; batch/stream parity for the shared extractor."""
 
+import os
 import shutil
 
 import pandas as pd
 import pytest
 
 from mistral_ocr_app_spark.streaming.metrics import extract_stream, turn_rate_stream
+
+JOBS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
 
 
 @pytest.fixture(scope="module")
@@ -149,7 +152,7 @@ def test_compaction_to_batch_layout(spark, fixture_paths, two_batch_dir, tmp_pat
     fingerprint audit passes on the result."""
     import sys
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     from compact_job import compact
 
     from mistral_ocr_app_spark.plans.lineage import verify_lineage
